@@ -28,8 +28,8 @@ import java.nio.file.{Files, Paths}
   *     bracketing the run; numbers recorded under load far above the
   *     core count are co-tenant noise, not regressions (round 7's
   *     d04/d05/s04–s06 ghosts).
-  *   - `"memo_cold": [names...]` — queries whose first rep executed a
-  *     PlanMemo builder (a shared memoized index later queries reuse);
+  *   - `"memo_cold": [names...]` — queries one of whose reps executed
+  *     a PlanMemo builder (a shared memoized index later queries reuse);
   *     their standalone SPARK_GRAFT_ONLY times include that build and
   *     read slower than their slot in a full alphabetical run.
   */
@@ -42,6 +42,19 @@ object Bench {
       .filterNot { case (name, _) => name.startsWith("ml") }
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
       .sortBy(_._1)
+  }
+
+  /** A query's `cold_sec`: the seconds of the FIRST rep that ran a
+    * PlanMemo build, or None when no rep built. `tally` is the build
+    * counter before rep 1 and after each rep (reps + 1 snapshots), so
+    * a build in a later rep (LRU eviction, a conf-dependent key) is
+    * charged to that rep's time, never to rep 1's.
+    */
+  private[graft] def coldSeconds(
+      times: Seq[Double], tally: Seq[Long]): Option[Double] = {
+    require(tally.length == times.length + 1,
+      s"need ${times.length + 1} build-tally snapshots, got ${tally.length}")
+    times.indices.find(i => tally(i + 1) > tally(i)).map(times)
   }
 
   def main(args: Array[String]): Unit = {
@@ -82,20 +95,23 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg
     var failed = List.empty[String]
-    // Queries whose FIRST rep executed a PlanMemo builder (a shared
+    // Queries one of whose reps executed a PlanMemo builder (a shared
     // memoized index this query pays for and later queries reuse) —
-    // their rep-1 time includes the build, so min-of-n usually hides
+    // that rep's time includes the build, so min-of-n usually hides
     // it, but a standalone SPARK_GRAFT_ONLY run of such a query reads
     // slower than its slot in a full run. Recorded as "memo_cold",
-    // and (round-18 verdict "next" 3) their rep-1 seconds — the cost
-    // INCLUDING the artifact/memo build min-of-n would otherwise hide
-    // — are recorded as "cold_sec" so artifact-driven warm-read wins
-    // are never invisible precomputation. Additive field: the driver's
-    // total/queries contract is untouched.
+    // and (round-18 verdict "next" 3) the seconds of the rep that
+    // built — the cost INCLUDING the artifact/memo build min-of-n
+    // would otherwise hide — are recorded as "cold_sec" so
+    // artifact-driven warm-read wins are never invisible
+    // precomputation. Additive field: the driver's total/queries
+    // contract is untouched.
     var memoCold = List.empty[String]
     var coldSec = Map.empty[String, Double]
     val results = headline.map { case (name, fn) =>
-      val builds0 = PlanMemo.builds
+      // build tally before rep 1 and after every rep: a build is
+      // charged to the rep that ran it (see coldSeconds)
+      val tally = scala.collection.mutable.ArrayBuffer(PlanMemo.builds)
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
         try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
@@ -109,11 +125,13 @@ object Bench {
         // leak into later queries' memory budget — or make a repeat rep
         // artificially cache-warm (round-3 verdict "What's wrong" 2).
         spark.catalog.clearCache()
-        (System.nanoTime() - t0) / 1e9
+        val sec = (System.nanoTime() - t0) / 1e9
+        tally += PlanMemo.builds
+        sec
       }
-      if (PlanMemo.builds > builds0) {
+      coldSeconds(times, tally.toSeq).foreach { t =>
         memoCold ::= name
-        coldSec += name -> times.head
+        coldSec += name -> t
       }
       val sec = times.min
       System.err.println(
@@ -135,7 +153,7 @@ object Bench {
       val fs = failed.reverse
       val fails = fs.take(maxFails).map("\"" + _ + "\"").mkString("[", ",", "]")
       val cold = memoCold.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // rep-1 seconds for queries that paid a memo/artifact build.
+      // building-rep seconds for queries that paid a memo/artifact build.
       // The PRINTED line carries only the `maxCold` largest (the heavy
       // artifact builders a grader acts on) so the slowest-queries
       // window stays wide; bench_local.json carries the full map.

@@ -25,12 +25,15 @@ object Par {
 
   /** Run the thunks as concurrent jobs ([[maxInFlight]] at a time,
     * FIFO — later thunks back-fill the tail of earlier ones); returns
-    * results in order. The first failure propagates (same contract as
-    * running them sequentially — Bench charges the elapsed time
-    * either way); on failure the pool is shut down immediately so
-    * queued thunks never submit their jobs (in-flight Spark jobs
-    * still drain — callers own job-group cancellation if they need
-    * hard interruption).
+    * results in order. Failure contract (ParSpec pins each clause):
+    *   - the FIRST failure (in time) propagates, after the other
+    *     in-flight thunks return — the same contract as running them
+    *     sequentially; Bench charges the elapsed time either way;
+    *   - in-flight siblings are never interrupted: their Spark jobs
+    *     drain (callers own job-group cancellation if they need hard
+    *     interruption);
+    *   - a thunk still queued when a failure lands never starts, so
+    *     it never submits its jobs.
     *
     * Callers MUST materialize any SHARED persisted frame before
     * fanning out (one count() — see PlanMemo.cachedEager's doc):
@@ -43,13 +46,21 @@ object Par {
     if (thunks.lengthCompare(2) < 0) return thunks.map(_()).toSeq
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(thunks.length, maxInFlight))
+    val firstFailure =
+      new java.util.concurrent.atomic.AtomicReference[Throwable]
     try {
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-      val fs = thunks.map(t => Future(t())).toSeq
-      try fs.map(Await.result(_, Duration.Inf))
-      catch { case e: Throwable => pool.shutdownNow(); throw e }
+      val fs = thunks.map { t =>
+        pool.submit(new java.util.concurrent.Callable[Option[T]] {
+          def call(): Option[T] =
+            if (firstFailure.get != null) None
+            else try Some(t()) catch {
+              case e: Throwable => firstFailure.compareAndSet(null, e); None
+            }
+        })
+      }
+      val out = fs.map(_.get())
+      Option(firstFailure.get).foreach(e => throw e)
+      out.map(_.get).toSeq
     } finally pool.shutdown()
   }
 }

@@ -70,7 +70,7 @@ import scala.collection.mutable
   * Reference scope note: the reference repo trains nothing like this
   * (its text work is the `spark_jobs` KPI queries); this operator is
   * part of the mandated LLM-pipeline surface, with the contract
-  * inherited from t21's oracle-gated merge loop.
+  * of t21's oracle-gated trainer ([[Text.bpeTrainDriver]]).
   */
 object BpeDist {
 

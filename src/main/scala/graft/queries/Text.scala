@@ -1414,7 +1414,8 @@ object Text {
     * O(distinct words), not O(tokens)); every merge round afterwards
     * runs on this dictionary, whose cardinality is the corpus
     * VOCABULARY (~1e8 rows at 100 TB, not 1e12 tokens). Memoized
-    * eager: all [[bpeRounds]] pair-count jobs re-scan it. Byte-level
+    * eager: the trainer's one dictionary collect ([[bpeTrainAt]]) and
+    * every encode join re-read it. Byte-level
     * (round-14): symbols are UTF-8 bytes, so punctuation, digits,
     * mixed case, and multi-byte scripts all train exactly — no
     * alphabet restriction.
@@ -1442,81 +1443,41 @@ object Text {
           // counting reads only (freq, sym)
           .select("word", "freq", "sym")))
 
-  /** The eager Lloyd-style training loop (see Clustering.centroidsOn
-    * for the pattern): each round is one pair-count aggregation over
-    * the dictionary — explode adjacent symbol pairs weighted by word
-    * freq, groupBy(pair) sum, TakeOrdered(1) by (cnt DESC, pair ASC)
-    * — followed by a driver-side record of the winning merge. The
-    * collect is ONE row per round (O(k) driver metadata, like the
-    * k-means centroids), and the merge is re-applied lazily as a
-    * growing `replace` chain over the memoized base dictionary, so
-    * no per-round re-materialization is needed (k×replace per row ≈
-    * trivial next to the pair explode).
-    *
-    * Merge application contract (pinned by TextBpeSpec and mirrored
-    * verbatim by the DuckDB oracle): a merge (l, r) rewrites the
-    * symbol string via `trim(replace(' '||sym||' ', ' l r ', ' lr '))`
-    * — leftmost-first, non-overlapping, separator-consuming. On a run
-    * like "a a a a" this merges ONE pair per round ("aa a a"), where
-    * canonical BPE would take two; both engines implement `replace`
-    * identically, so the gate is exact, and the deviation only
-    * matters for same-symbol runs (rare outside degenerate corpora).
-    *
-    * Invariant (TextBpeSpec): winning counts are non-increasing
-    * across rounds — any pair CREATED by a merge (x, lr) occurs only
-    * where (x, l) occurred, so its count is bounded by a candidate
-    * the previous round already considered.
-    *
-    * Degenerate corpora (no adjacent pair anywhere before `rounds`
-    * merges complete — e.g. single-letter words only): the engine
-    * fails LOUDLY here (the require below), surfacing as a Verify
-    * `err`, while the unrolled oracle would degrade to fewer rows /
-    * NULL-sym CTEs. The failure modes differ but neither can pass a
-    * gate silently; unreachable on any realistic text corpus.
-    */
-  /** The ONE spelling of merge application — (l, r) rewritten over a
-    * symbol-string expression as a leftmost-first, non-overlapping,
-    * separator-consuming replace. Train (bpeMergesOn), batch encode
-    * (bpeEncodeDict) and stream encode (bpeNtokExpr) all go through
-    * here, so their spellings cannot drift (the divergence class
-    * TextBpeSpec's equality tests gate).
+  /** The ONE spelling of merge application as a Spark expression —
+    * (l, r) rewritten over a symbol-string expression via
+    * `trim(replace(' '||sym||' ', ' l r ', ' lr '))`: leftmost-first,
+    * non-overlapping, separator-consuming. On a run like "a a a a"
+    * this merges ONE pair per round ("aa a a"), where canonical BPE
+    * would take two; the DuckDB oracle chain ([[bpeChainCtes]]) spells
+    * the same `replace`, the in-memory trainer's [[bpeApplyMerge]]
+    * implements it over arrays, and the deviation only matters for
+    * same-symbol runs (rare outside degenerate corpora). Batch encode
+    * (bpeEncodeDict) and stream encode (bpeNtokExpr) both go through
+    * here, so their spellings cannot drift (TextBpeSpec fuzzes this
+    * spelling against the pure-Scala reference).
     */
   private def mergeReplaceExpr(e: String, l: String, r: String): String =
     s"trim(replace(concat(' ', $e, ' '), ' $l $r ', ' $l$r '))"
 
-  private[graft] def bpeMergesOn(
-      spark: SparkSession, key: String, vocab: => DataFrame,
-      rounds: Int = bpeRounds)
-      : Seq[(Int, String, String, Long)] =
-    PlanMemo.cachedValue(spark, s"text.bpeMerges:$key:$rounds") {
-      // vocab is by-name: a memo HIT never touches the dictionary, so
-      // w15 (which only needs the merge list) doesn't rebuild the
-      // eager vocab frame after a cache eviction
-      val dict = vocab
-      val merges = scala.collection.mutable.ListBuffer
-        .empty[(Int, String, String, Long)]
-      var symExpr = "sym"
-      for (round <- 1 to rounds) {
-        val best = dict
-          .select(col("freq"), split(expr(symExpr), " ").as("ss"))
-          .filter(size(col("ss")) >= 2)
-          .select(col("freq"), explode(expr(
-            "transform(sequence(1, size(ss) - 1), " +
-              "i -> concat(element_at(ss, i), ' ', element_at(ss, i + 1)))"))
-            .as("pair"))
-          .groupBy("pair").agg(sum("freq").as("cnt"))
-          .orderBy(desc("cnt"), col("pair"))
-          .limit(1).collect()
-        require(best.nonEmpty,
-          s"bpe training ran out of mergeable pairs at round $round")
-        val pair = best(0).getString(0)
-        val cnt = best(0).getLong(1)
-        val Array(l, r) = pair.split(" ", 2)
-        merges += ((round, l, r, cnt))
-        symExpr = mergeReplaceExpr(symExpr, l, r)
-      }
-      merges.toList
-    }
+  /** t21's merge table: the one trainer ([[bpeTrainAt]]) at
+    * [[bpeRounds]], UNPRUNED — the DuckDB oracle trains on the full
+    * dictionary, so `spark.graft.bpeMinFreq` must never reach it.
+    *
+    * Degenerate corpora (no adjacent pair anywhere before
+    * [[bpeRounds]] merges complete — e.g. single-letter words only):
+    * the engine fails LOUDLY here, surfacing as a Verify `err`, while
+    * the unrolled oracle would degrade to fewer rows / NULL-sym CTEs.
+    * The failure modes differ but neither can pass a gate silently;
+    * unreachable on any realistic text corpus.
+    */
+  private def bpeTrainOracleGated(
+      spark: SparkSession, dir: String): Seq[(Int, String, String, Long)] = {
+    val res = bpeTrainAt(spark, dir, bpeRounds, checkpointRound = 0,
+      minFreq = 1L)
+    require(!res.exhausted, "bpe training ran out of mergeable pairs " +
+      s"at round ${res.merges.length + 1}")
+    res.merges
+  }
 
   /** The corpus's trained tokenizer as a PUBLISHED disk artifact —
     * the shape every real pipeline ships: train once, persist the
@@ -1564,7 +1525,7 @@ object Text {
     PlanMemo.cachedValue(spark,
       s"text.bpeMergeArtifact:$dir:${PlanMemo.corpusFingerprint(dir)}") {
       val df = PlanMemo.publishedParquet(spark, dir, "bpe_merges") {
-        val m = bpeMergesOn(spark, s"text:$dir", bpeVocab(spark, dir))
+        val m = bpeTrainOracleGated(spark, dir)
         import spark.implicits._
         m.toDF("round", "lhs", "rhs", "cnt")
           .withColumn("fmt_version", lit(bpeFormatVersion))
@@ -1577,7 +1538,7 @@ object Text {
         // under SPARK_GRAFT_ARTIFACTS): refuse it and train fresh in
         // this session — mis-encoding under a drifted tokenizer is
         // the one failure a frozen-artifact pipeline must never have
-        bpeMergesOn(spark, s"text:$dir:retrain", bpeVocab(spark, dir))
+        bpeTrainOracleGated(spark, dir)
       }
     }
 
@@ -1588,6 +1549,11 @@ object Text {
     * over byte symbols — small, deterministic, persisted as the
     * frozen tokenizer artifact ([[bpeMerges]]), and hash-gated
     * against a fully unrolled DuckDB twin.
+    *
+    * Invariant (TextBpeSpec): winning counts are non-increasing
+    * across rounds — any pair CREATED by a merge (x, lr) occurs only
+    * where (x, l) occurred, so its count is bounded by a candidate
+    * the previous round already considered.
     */
   def bpeTrain(spark: SparkSession, dir: String): DataFrame = {
     val m = bpeMerges(spark, dir)
@@ -1662,20 +1628,22 @@ object Text {
       tokensAtCheckpoint: Long,
       tokensFinal: Long)
 
-  /** Production-scale BPE training (round-15 verdict "next" 1): the
-    * classic in-memory trainer over the COLLECTED word-frequency
-    * dictionary — the architecture every shipped tokenizer trainer
-    * uses (Sennrich's subword-nmt and HuggingFace `tokenizers` both
-    * count words distributed/streamed, then run the merge loop on the
-    * in-memory dictionary). The Spark side contributes the one
-    * corpus-sized pass ([[bpeVocab]]'s explode→groupBy, shuffle
-    * O(distinct words)); this loop is O(dictionary), incremental, and
-    * runs thousands of merges per second — vs the oracle-gated
-    * [[bpeMergesOn]]'s one driver-paced Spark job PER ROUND, which is
-    * correct but caps at [[bpeRounds]] by pacing and by the statically
-    * unrolled DuckDB twin.
+  /** The BPE trainer (round-15 verdict "next" 1): the classic
+    * in-memory trainer over the COLLECTED word-frequency dictionary —
+    * the architecture every shipped tokenizer trainer uses (Sennrich's
+    * subword-nmt and HuggingFace `tokenizers` both count words
+    * distributed/streamed, then run the merge loop on the in-memory
+    * dictionary). The Spark side contributes the one corpus-sized
+    * pass ([[bpeVocab]]'s explode→groupBy, shuffle O(distinct words))
+    * and one dictionary collect; this loop is O(dictionary),
+    * incremental, and runs thousands of merges per second, with no
+    * Spark job per round. Every merge table is trained here (or by
+    * its executor-side twin [[BpeDist.train]] above the driver budget)
+    * through [[bpeTrainAt]]: t21's [[bpeRounds]]-merge table, t25's
+    * 1k and t30's 32k tables.
     *
-    * EXACTLY the same contract as [[bpeMergesOn]] / TextBpeSpec's
+    * EXACTLY the contract of the unrolled DuckDB chain
+    * ([[bpeChainCtes]], t21's hash gate) and TextBpeSpec's
     * `refBpe` (fuzz-pinned): pair counts weighted by word freq over
     * adjacent symbols (same-symbol runs count every overlapping
     * position), winner by (cnt DESC, "l r" ASC), and the merge applied
@@ -1853,9 +1821,9 @@ object Text {
     *   - vocab_reached: the merge table hit the target (or the
     *     dictionary was fully merged — impossible on realistic text);
     *   - prefix_agrees: the first [[bpeRounds]] merges EQUAL the
-    *     oracle-hash-gated t21 artifact — the two trainers implement
-    *     one contract, so the driver loop inherits t21's cross-engine
-    *     gate on its prefix;
+    *     oracle-hash-gated t21 artifact — one trainer at two rounds
+    *     targets, so the 1k table inherits t21's cross-engine gate on
+    *     its prefix;
     *   - counts_nonincreasing: winning counts never rise (the BPE
     *     invariant TextBpeSpec proves);
     *   - wellformed: every merged symbol is a hex byte concatenation;
@@ -1873,16 +1841,15 @@ object Text {
     */
   private[graft] def bpeLargeTrain(
       spark: SparkSession, dir: String): BpeDriverTrain =
-    bpeTrainAt(spark, dir, bpeLargeVocabTarget - 256, bpeRounds)
+    bpeTrainAt(spark, dir, bpeLargeVocabTarget - 256, bpeRounds,
+      bpeMinFreq(spark))
 
-  /** One in-memory train at an arbitrary merge-rounds target,
-    * memoized per (corpus, minFreq, rounds, checkpoint). The
-    * dictionary collect reuses [[bpeVocab]]'s memoized corpus pass;
-    * determinism does NOT depend on collect order (the pair queue
-    * aggregates counts and tie-breaks on the pair string), which is
-    * what makes the prefix bands exact: training to N merges and
-    * training to M > N merges agree on the first N rules.
+  /** The df-pruning cut `spark.graft.bpeMinFreq` (default 1 = exact)
+    * for the trains that allow it (t25, t30, t33); t21 never reads it.
     */
+  private def bpeMinFreq(spark: SparkSession): Long =
+    spark.conf.get("spark.graft.bpeMinFreq", "1").toLong
+
   /** Driver dictionary budget (rows) for the in-memory trainer. The
     * default keeps the largest MEASURED-viable vocabulary-stress point
     * driver-side (SCALE.md: 14.05M distinct words trained exact at
@@ -1899,10 +1866,21 @@ object Text {
     */
   val bpeMaxDriverDictRows: Long = 16000000L
 
+  /** The ONE training entry point: a train at an arbitrary
+    * merge-rounds target over the dictionary pruned to
+    * `freq >= minFreq`, memoized per (corpus, minFreq, rounds,
+    * checkpoint). The dictionary collect reuses [[bpeVocab]]'s
+    * memoized corpus pass; determinism does NOT depend on collect
+    * order (the pair queue aggregates counts and tie-breaks on the
+    * pair string), which is what makes the prefix bands exact:
+    * training to N merges and training to M > N merges agree on the
+    * first N rules. Running out of pairs is reported as
+    * `exhausted = true`, never thrown — callers that need the full
+    * table (t21) fail loudly themselves.
+    */
   private[graft] def bpeTrainAt(
       spark: SparkSession, dir: String,
-      rounds: Int, checkpointRound: Int): BpeDriverTrain = {
-    val minFreq = spark.conf.get("spark.graft.bpeMinFreq", "1").toLong
+      rounds: Int, checkpointRound: Int, minFreq: Long): BpeDriverTrain = {
     val budget = spark.conf.get("spark.graft.bpeMaxDriverDictRows",
       bpeMaxDriverDictRows.toString).toLong
     PlanMemo.cachedValue(spark,
@@ -1913,8 +1891,10 @@ object Text {
         .select("freq", "sym")
       // one cheap count decides the path; the memoized result is
       // bit-identical either way (TextBpeSpec + t33 pin it), so the
-      // memo key deliberately omits the budget
-      if (pruned.count() <= budget) {
+      // memo key deliberately omits the budget. Counted as rows of the
+      // cached dictionary scan: one job, where Dataset.count()'s
+      // aggregate adds an exchange and a second job
+      if (pruned.queryExecution.toRdd.count() <= budget) {
         val dict = pruned.collect()
           .map(r => (r.getLong(0), r.getString(1))).toSeq
         bpeTrainDriver(dict, rounds, checkpointRound = checkpointRound)
@@ -1958,7 +1938,7 @@ object Text {
     */
   private[graft] def bpeProdTrain(
       spark: SparkSession, dir: String): BpeDriverTrain = {
-    val minFreq = spark.conf.get("spark.graft.bpeMinFreq", "1").toLong
+    val minFreq = bpeMinFreq(spark)
     PlanMemo.cachedValue(spark,
       s"text.bpeProdArtifact:$dir:${PlanMemo.corpusFingerprint(dir)}" +
         s":$minFreq") {
@@ -1979,7 +1959,7 @@ object Text {
       }
       def freshTrain(): BpeDriverTrain =
         bpeTrainAt(spark, dir, bpeProdVocabTarget - 256,
-          bpeLargeVocabTarget - 256)
+          bpeLargeVocabTarget - 256, minFreq)
       val df = PlanMemo.publishedParquet(spark, dir, name)(
         payload(freshTrain()))
       bpeProdArtifactDecode(df, minFreq).getOrElse {
@@ -3232,7 +3212,7 @@ object Text {
     val rounds = spark.conf.get("spark.graft.bpeDistGateRounds",
       bpeDistGateRounds.toString).toInt
     val ck = math.min(12, rounds)
-    val minFreq = spark.conf.get("spark.graft.bpeMinFreq", "1").toLong
+    val minFreq = bpeMinFreq(spark)
     val (dist, drv) = PlanMemo.cachedValue(spark,
       s"text.bpeDistGate:$dir:${PlanMemo.corpusFingerprint(dir)}" +
         s":$minFreq:$rounds") {

@@ -2,11 +2,13 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins t21's BPE-training contract: the merge-learning loop on
-  * hand-built dictionaries with hand-derived expected merges, the
-  * separator-consuming `replace` semantics on same-symbol runs, and
-  * the non-increasing-counts invariant that justifies gating the
-  * learned table against the unrolled DuckDB oracle.
+/** Pins the BPE-training contract: the one trainer (the in-memory
+  * [[Text.bpeTrainDriver]] and its executor-side twin
+  * [[BpeDist.train]]) on hand-built dictionaries with hand-derived
+  * expected merges, the separator-consuming `replace` semantics on
+  * same-symbol runs, and the non-increasing-counts invariant that
+  * justifies gating the learned table against the unrolled DuckDB
+  * oracle.
   */
 class TextBpeSpec extends AnyFunSuite {
   import TestSpark._
@@ -18,6 +20,39 @@ class TextBpeSpec extends AnyFunSuite {
       .toDF("word", "freq", "sym")
   }
 
+  /** Both trainers' merge tables on one dictionary, asserted equal. */
+  private def trainBoth(rows: Seq[(Long, String)], rounds: Int)
+      : Seq[(Int, String, String, Long)] = {
+    val drv = Text.bpeTrainDriver(rows, rounds).merges
+    val dist = BpeDist.train(spark, vocab(rows: _*), rounds).merges
+    assert(dist === drv, s"trainers diverge on ${rows.mkString(", ")}")
+    drv
+  }
+
+  private val classic = Seq(
+    (5L, "l o w"), (2L, "l o w e r"),
+    (6L, "n e w e s t"), (3L, "w i d e s t"))
+
+  /** The UTF-8 bytes of `w` as space-joined uppercase hex pairs, split
+    * in pure Scala (independent of bpeVocab's Spark spelling).
+    */
+  private def hexSym(w: String): String =
+    w.getBytes("UTF-8").map("%02X".format(_)).mkString(" ")
+
+  /** A one-corpus directory whose documents hold `texts`. */
+  private def corpusDir(prefix: String, texts: Seq[String]): String = {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.sql.functions.{col, length, lit}
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+      .withColumn("lang", lit("en")).withColumn("source", lit("s"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    dir
+  }
+
   test("learns the hand-derived merge sequence on the classic corpus") {
     // Sennrich-style toy dictionary (no end-of-word marker in our
     // variant): low×5, lower×2, newest×6, widest×3. Worked by hand:
@@ -25,10 +60,7 @@ class TextBpeSpec extends AnyFunSuite {
     // pair string ascending. The merge loop is alphabet-agnostic
     // (corpus paths feed it hex byte symbols), so letter symbols
     // keep the hand derivation readable.
-    val v = vocab(
-      (5L, "l o w"), (2L, "l o w e r"),
-      (6L, "n e w e s t"), (3L, "w i d e s t"))
-    val m = Text.bpeMergesOn(spark, "spec:classic", v, rounds = 8)
+    val m = trainBoth(classic, rounds = 8)
     assert(m === Seq(
       (1, "e", "s", 9L), (2, "es", "t", 9L),
       (3, "l", "o", 7L), (4, "lo", "w", 7L),
@@ -43,8 +75,7 @@ class TextBpeSpec extends AnyFunSuite {
     // pair ascending). A two-merge application ("aa aa") would leave
     // no (a, a) for round 2 — this pins the documented deviation
     // from canonical BPE, mirrored exactly by the DuckDB oracle.
-    val m = Text.bpeMergesOn(spark, "spec:run", vocab((1L, "a a a a")),
-      rounds = 2)
+    val m = trainBoth(Seq((1L, "a a a a")), rounds = 2)
     assert(m === Seq((1, "a", "a", 3L), (2, "a", "a", 1L)))
   }
 
@@ -66,11 +97,8 @@ class TextBpeSpec extends AnyFunSuite {
     // after the 8 learned merges: low→[low], lower→[low,e,r],
     // newest→[newest], widest→[w,i,dest] (chain applied in round
     // order, separator-consuming replace — worked by hand)
-    val v = vocab(
-      (5L, "l o w"), (2L, "l o w e r"),
-      (6L, "n e w e s t"), (3L, "w i d e s t"))
-    val m = Text.bpeMergesOn(spark, "spec:classic", v, rounds = 8)
-    val d = Text.bpeEncodeDict(m, v)
+    val m = Text.bpeTrainDriver(classic, 8).merges
+    val d = Text.bpeEncodeDict(m, vocab(classic: _*))
       .collect().map(r => r.getString(0) -> r.getInt(1)).toMap
     assert(d === Map("low" -> 1, "lower" -> 3, "newest" -> 1,
       "widest" -> 3))
@@ -103,7 +131,11 @@ class TextBpeSpec extends AnyFunSuite {
     * cannot hide in a shared implementation.
     */
   private def refBpe(vocab: Seq[(Long, String)], rounds: Int)
-      : Seq[(Int, String, String, Long)] = {
+      : Seq[(Int, String, String, Long)] = refBpeRun(vocab, rounds)._1
+
+  /** [[refBpe]]'s merge table plus every word's final symbol string. */
+  private def refBpeRun(vocab: Seq[(Long, String)], rounds: Int)
+      : (Seq[(Int, String, String, Long)], Seq[String]) = {
     var words = vocab
     val out = scala.collection.mutable.ListBuffer
       .empty[(Int, String, String, Long)]
@@ -115,7 +147,7 @@ class TextBpeSpec extends AnyFunSuite {
         for (i <- 0 until ss.length - 1)
           counts((ss(i), ss(i + 1))) += f
       }
-      if (counts.isEmpty) return out.toList
+      if (counts.isEmpty) return (out.toList, words.map(_._2))
       val ((l, r), c) = counts.toSeq
         .sortBy { case ((l, r), c) => (-c, l + " " + r) }.head
       out += ((round, l, r, c))
@@ -123,13 +155,14 @@ class TextBpeSpec extends AnyFunSuite {
         (f, (" " + sym + " ").replace(s" $l $r ", s" $l$r ").trim)
       }
     }
-    out.toList
+    (out.toList, words.map(_._2))
   }
 
   test("random vocabularies: engine merges equal the pure-Scala reference") {
     // deterministic seeded fuzz: words over {a,b,c} keep pair
     // collisions (and ties) frequent, so the tie-break and the
-    // same-symbol-run replace semantics are both exercised hard
+    // same-symbol-run replace semantics are both exercised hard —
+    // through both trainers (driver and executor-side)
     val rnd = new scala.util.Random(13)
     val rounds = 3
     var checked = 0
@@ -143,8 +176,7 @@ class TextBpeSpec extends AnyFunSuite {
       val fixed = words.map(w => (1L + rnd.nextInt(9), w.toSeq.mkString(" ")))
       val ref = refBpe(fixed, rounds)
       if (ref.length == rounds) { // enough mergeable pairs to train
-        val got = Text.bpeMergesOn(spark, s"spec:fuzz:$attempts",
-          vocab(fixed: _*), rounds)
+        val got = trainBoth(fixed, rounds)
         assert(got === ref,
           s"divergence on vocab ${fixed.mkString("[", ", ", "]")}")
         checked += 1
@@ -204,12 +236,13 @@ class TextBpeSpec extends AnyFunSuite {
     assert(got.tokensAtCheckpoint < got.tokensInitial)
   }
 
-  test("driver trainer prefix equals the oracle-gated t21 artifact on sf0.001") {
+  test("the t21 artifact equals the pure-Scala reference on sf0.001") {
+    // t21 is trained by bpeTrainDriver itself, so the independent
+    // reference is the non-circular check of the published table
     val dict = Text.bpeVocab(spark, sfDir)
       .select("freq", "sym").collect()
       .map(r => (r.getLong(0), r.getString(1))).toSeq
-    val fast = Text.bpeTrainDriver(dict, Text.bpeRounds)
-    assert(fast.merges === Text.bpeMerges(spark, sfDir).toList)
+    assert(Text.bpeMerges(spark, sfDir) === refBpe(dict, Text.bpeRounds))
   }
 
   test("t25 bands are all TRUE on sf0.001") {
@@ -361,10 +394,11 @@ class TextBpeSpec extends AnyFunSuite {
   test("the published merge artifact equals a direct training run") {
     // bpeMerges persists the trained tokenizer via publishedParquet
     // and re-reads it; the frozen artifact must be byte-identical to
-    // what bpeMergesOn derives directly on the same corpus
-    val direct = Text.bpeMergesOn(
-      spark, s"spec:direct:$sfDir", Text.bpeVocab(spark, sfDir))
-    assert(Text.bpeMerges(spark, sfDir) === direct)
+    // what the trainer derives directly on the same corpus
+    val direct = Text.bpeTrainAt(spark, sfDir, Text.bpeRounds,
+      checkpointRound = 0, minFreq = 1L)
+    assert(!direct.exhausted)
+    assert(Text.bpeMerges(spark, sfDir) === direct.merges)
   }
 
   test("vocabulary pass aggregates distinct words as hex byte symbols") {
@@ -487,10 +521,8 @@ class TextBpeSpec extends AnyFunSuite {
 
   test("byte-level fuzz: multi-byte UTF-8 vocabularies match the reference") {
     // words mixing 1-byte (ascii), 2-byte (é/ü) and 3-byte (中) chars;
-    // sym built by an independent pure-Scala hex-pair byte split, so
-    // this also pins bpeVocab's hex spelling against the merge loop
-    def hexSym(w: String): String =
-      w.getBytes("UTF-8").map("%02X".format(_)).mkString(" ")
+    // sym built by an independent pure-Scala hex-pair byte split, fed
+    // to both trainers
     val alphabet = Array("a", "b", "é", "ü", "中", "!", "9")
     val rnd = new scala.util.Random(29)
     val rounds = 3
@@ -505,12 +537,7 @@ class TextBpeSpec extends AnyFunSuite {
       val fixed = words.map(w => (1L + rnd.nextInt(9), hexSym(w)))
       val ref = refBpe(fixed, rounds)
       if (ref.length == rounds) {
-        val s = spark
-        import s.implicits._
-        val v = fixed.zip(words).map { case ((f, sym), w) => (w, f, sym) }
-          .toDF("word", "freq", "sym")
-        val got = Text.bpeMergesOn(spark, s"spec:bytefuzz:$attempts", v,
-          rounds)
+        val got = trainBoth(fixed, rounds)
         assert(got === ref,
           s"divergence on vocab ${fixed.mkString("[", ", ", "]")}")
         // merged symbols stay even-length hex (byte concatenations)
@@ -747,12 +774,105 @@ class TextBpeSpec extends AnyFunSuite {
     spark.conf.set(key, "0")
     try {
       val got = Text.bpeTrainAt(spark, sfDir, rounds = 13,
-        checkpointRound = 5)
+        checkpointRound = 5, minFreq = 1L)
       val dict = Text.bpeVocab(spark, sfDir)
         .select("freq", "sym").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSeq
       val drv = Text.bpeTrainDriver(dict, 13, checkpointRound = 5)
       assert(got === drv)
     } finally spark.conf.set(key, Text.bpeMaxDriverDictRows.toString)
+  }
+
+  // ----- t21 through the one trainer -----
+
+  test("t21 fails loudly when the corpus runs out of mergeable pairs") {
+    // two multi-byte words give exactly two merges ("ab" ×2 wins
+    // round 1, "cd" round 2); every other word is one byte, so round
+    // 3 finds no adjacent pair — on BOTH sides of the dictionary-size
+    // gate (budget 0 forces the executor-side trainer; fresh corpus
+    // dirs keep the memoized results apart)
+    val texts = Seq("ab ab cd", "x y ! 9")
+    val key = "spark.graft.bpeMaxDriverDictRows"
+    for (budget <- Seq(Text.bpeMaxDriverDictRows, 0L)) {
+      val dir = corpusDir("bpeexhaust", texts)
+      spark.conf.set(key, budget.toString)
+      try {
+        val e = intercept[IllegalArgumentException](
+          Text.bpeTrain(spark, dir).collect())
+        assert(e.getMessage.contains(
+          "bpe training ran out of mergeable pairs at round 3"),
+          s"budget=$budget: ${e.getMessage}")
+      } finally {
+        spark.conf.set(key, Text.bpeMaxDriverDictRows.toString)
+        PlanMemo.drop(spark, s"text.bpeVocab:$dir")
+      }
+    }
+  }
+
+  test("spark.graft.bpeMinFreq never reaches t21's merge table") {
+    // t21 is hash-gated against the UNPRUNED DuckDB oracle. Corpus:
+    // the sf0.001 documents plus 1200 distinct once-seen words
+    // sharing the pair "q z" — unpruned, that pair enters the
+    // 12-merge table; pruned at freq >= 2 it vanishes, so a leaked
+    // conf would change the table. Two copies of one corpus: one
+    // trained under the default conf, one under bpeMinFreq=2.
+    val tail = (0 until 1200).map { i =>
+      "qz" + Seq(i / 676, i / 26 % 26, i % 26).map(d => ('a' + d).toChar)
+        .mkString
+    }.mkString(" ")
+    val texts = Tables.documents(spark, sfDir)
+      .select("text").collect()
+      .map(r => Option(r.getString(0)).getOrElse("")).toSeq :+ tail
+    val dirs = Seq(corpusDir("bpeminfreq1", texts),
+      corpusDir("bpeminfreq2", texts))
+    val old = spark.conf.getOption("spark.graft.bpeMinFreq")
+    try {
+      val baseline = Text.bpeMerges(spark, dirs(0))
+      assert(baseline.exists { case (_, l, r, _) => (l, r) == ("71", "7A") })
+      spark.conf.set("spark.graft.bpeMinFreq", "2")
+      assert(Text.bpeMerges(spark, dirs(1)) === baseline)
+      assert(Text.bpeTrainAt(spark, dirs(1), Text.bpeRounds,
+        checkpointRound = 0, minFreq = 2L).merges !== baseline,
+        "pruning does not change the table: the check has no teeth")
+    } finally {
+      old match {
+        case Some(v) => spark.conf.set("spark.graft.bpeMinFreq", v)
+        case None => spark.conf.unset("spark.graft.bpeMinFreq")
+      }
+      dirs.foreach(d => PlanMemo.drop(spark, s"text.bpeVocab:$d"))
+    }
+  }
+
+  test("Spark-expression merge spelling equals the reference's final words (fuzz)") {
+    // training no longer runs mergeReplaceExpr, but the batch encode
+    // (bpeEncodeDict) and the per-occurrence stream encode
+    // (bpeNtokExpr) still do: under refBpe's own merge table both must
+    // count exactly the symbols of refBpe's final words, over
+    // multi-byte UTF-8 and same-symbol runs
+    import org.apache.spark.sql.functions.expr
+    val s = spark
+    import s.implicits._
+    val alphabet = Array("a", "b", "aa", "é", "ü", "中", "!", "9")
+    val rnd = new scala.util.Random(59)
+    for (attempt <- 1 to 12) {
+      val words = Seq.fill(4 + rnd.nextInt(8)) {
+        (1 to (1 + rnd.nextInt(6)))
+          .map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+      }.distinct
+      val fixed = words.map(w => (1L + rnd.nextInt(9), hexSym(w)))
+      val (merges, finals) = refBpeRun(fixed, 1 + rnd.nextInt(8))
+      val want = words.zip(finals.map(_.split(" ").length)).toMap
+      val v = fixed.zip(words).map { case ((f, sym), w) => (w, f, sym) }
+        .toDF("word", "freq", "sym")
+      val got = Text.bpeEncodeDict(merges, v)
+        .withColumn("m", expr(Text.bpeNtokExpr(merges, "word")))
+        .collect().map(r => r.getString(0) -> (r.getInt(1), r.getInt(2)))
+        .toMap
+      assert(got.keySet === want.keySet)
+      want.foreach { case (w, n) =>
+        assert(got(w) === ((n, n)),
+          s"case $attempt: '$w' under ${merges.mkString(",")}")
+      }
+    }
   }
 }
